@@ -210,13 +210,10 @@ level the Python workers additionally compete with the single JVM's
 shuffle/GC threads for the same cores — two penalties a real N vs 4N
 *executor* cluster does not pay (each executor owns its cores and its
 host's memory bus). Spark efficiency relative to what this box can
-deliver at all: **{normalized if normalized else 'n/a'}**. Per-stage
-timings show the heavy OCR stage runs at 85–100% of the hardware rate at
-both levels; the residual gap is fixed job overhead (~4–5 s: scan, two
-small shuffles, scheduling) that amortizes with corpus size and is
-independent of cluster size. Host wall-time noise here is ±10–40%
-between runs minutes apart (see `runs_*` above) — levels are interleaved
-ABBA and the per-level median is reported for that reason.
+deliver at all: **{normalized if normalized else 'n/a'}**. Host wall-time
+noise here is ±10–40% between runs minutes apart (see `runs_*` above) —
+levels are interleaved ABBA and the per-level median is reported for that
+reason.
 
 Raw: `{json.dumps(result)}`
 """

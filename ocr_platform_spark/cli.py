@@ -28,7 +28,15 @@ from .lineage import run_extract_job
 
 
 def build_session(app_name: str = "ocr-extract") -> SparkSession:
-    """Session from spark-submit conf; sensible local defaults otherwise."""
+    """Session from spark-submit conf; sensible local defaults otherwise.
+
+    No ``spark.python.daemon.module`` here, unlike ``session.get_spark``:
+    under ``spark-submit --py-files ocr_platform_spark.zip`` the worker
+    daemon starts before any task has put the zip on its path, so
+    ``ocr_platform_spark.pyworker`` cannot be imported and every task fails.
+    Deployments that install the package on the executors can set the
+    conf themselves (docs/SCALE.md).
+    """
     b = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")

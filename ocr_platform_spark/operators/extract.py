@@ -47,14 +47,14 @@ detect-boxes boundary is exposed separately via :func:`detect_boxes_table`).
 
 from __future__ import annotations
 
+import functools
+import sys
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 from .. import formats, kernels, raster
 from ..schemas import BLOCK, PAGE_TASK, SPAN
@@ -193,12 +193,17 @@ def _ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 # --- relational glue ----------------------------------------------------------
 
 
-@pandas_udf(StringType())  # DataType instance: module must import on executors
-def unicode_strip(s: pd.Series) -> pd.Series:
-    """Exact ``str.strip()`` parity (``postprocess.py:6``): strips *all*
-    unicode whitespace, unlike ``F.trim`` which only strips ASCII spaces
-    (SURVEY.md §2.3 M11)."""
-    return s.fillna("").str.strip()
+@functools.cache
+def _py_whitespace() -> str:
+    """Every code point ``str.strip()`` removes (``postprocess.py:6``);
+    ``F.trim`` strips only ASCII spaces (SURVEY.md §2.3 M11). Built on
+    first use: the ~70 ms scan stays out of executor imports."""
+    return "".join(c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace())
+
+
+def unicode_strip(col: str) -> Column:
+    """Exact ``str.strip()`` parity as a JVM expression, null -> ``""``."""
+    return F.btrim(F.coalesce(F.col(col), F.lit("")), F.lit(_py_whitespace()))
 
 
 def exploded_spans(documents: DataFrame) -> DataFrame:

@@ -40,6 +40,8 @@ def get_spark(
         # descriptor rows are tiny; parquet splits stay balanced at scale
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.ui.enabled", "false")
+        # skips the per-task zip directory re-read (see pyworker.py)
+        .config("spark.python.daemon.module", "ocr_platform_spark.pyworker")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     for k, v in (extra_conf or {}).items():

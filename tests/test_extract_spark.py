@@ -2,6 +2,8 @@
 the Spark pipeline's per-document span sequence ``(kind, text, media_ref,
 order)`` equals the single-node oracle on the deterministic corpus."""
 
+import sys
+
 import pytest
 
 from ocr_platform_spark import corpus, oracle
@@ -275,3 +277,37 @@ def test_share_spans_replicated_identical_and_plan(spark, corpus_dir, spark_resu
     ck.count()  # materialize the lazy checkpoint
     ck_plan = ck._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in ck_plan
+
+
+def test_text_span_strip_matches_str_strip(spark, corpus_dir):
+    """Text spans are trimmed exactly like ``str.strip()``: every unicode
+    whitespace code point at either end goes, the look-alikes Python keeps
+    (ZWSP, BOM, Mongolian vowel separator) stay, and null becomes ``""``."""
+    from ocr_platform_spark.operators.extract import extract_documents
+    from ocr_platform_spark.schemas import DOCUMENTS
+
+    ws = [chr(c) for c in range(sys.maxunicode + 1) if chr(c).isspace()]
+    assert len(ws) == 29
+    lookalikes = ["\u200b", "\ufeff", "\u180e"]
+    texts = [f"{c}{c}a{c}b{c}" for c in ws]
+    texts += [f"{c}a b{c}" for c in lookalikes]
+    texts += ["".join(ws) + "a" + "".join(lookalikes) + "".join(ws),
+              "".join(ws), "", None]
+    docs, media = corpus.generate(60, seed=42, max_pages=30)
+    media_span = next(s for d in docs for s in d["spans"]
+                      if s["kind"] != "text")
+    spans = [{"kind": "text", "text": t, "media_ref": None, "offset": 2 * i}
+             for i, t in enumerate(texts)]
+    spans.append(dict(media_span, offset=len(texts) + 1))
+    doc = spark.createDataFrame([("ws", spans)], DOCUMENTS)
+    media_df = spark.read.parquet(f"{corpus_dir}/media.parquet")
+
+    (row,) = extract_documents(doc, media_df).collect()
+    got = [(s["kind"], s["text"], s["media_ref"], s["offset"])
+           for s in row["spans"]]
+    mb = {k: v["data"] for k, v in media.items()}
+    want = [(s.kind, s.text, s.media_ref, s.order)
+            for s in oracle.extract_document(spans, mb)]
+    assert got == want
+    assert [t for _, t, ref, _ in got if ref is None] == [
+        (t or "").strip() for t in texts]
