@@ -324,15 +324,25 @@ def _strip_mail_boilerplate(text: str) -> str:
     return "\n".join(out)
 
 
+#: an RFC 2047 encoded-word, ``=?charset?B|Q?text?=``
+_ENCODED_WORD_RE = re.compile(r"=\?[^?\s]+\?[bBqQ]\?[^?\s]*\?=")
+
+
 def _message_walk(msg: EmailMessage, depth: int, base: int, out: list,
                   keep_attachments: bool = False) -> int:
     subject = str(msg.get("Subject", "")).strip()
-    if "�" in subject:
+    raw = next((v for k, v in msg.raw_items() if k.lower() == "subject"), "")
+    # the parser keeps non-ASCII header bytes surrogate-escaped
+    raw = raw.encode("utf-8", "surrogateescape").decode("utf-8",
+                                                         "surrogateescape")
+    if ("�" in subject and "�" not in raw
+            and _ENCODED_WORD_RE.search(raw)):
         # a malformed RFC 2047 encoded-word decodes to U+FFFD
         # replacement garbage via the stdlib's errors="replace" header
         # path — the same corruption signal the body-charset rule
         # quarantines on (module docstring); emitting it would plant
-        # mojibake at the top of every rendered message
+        # mojibake at the top of every rendered message. A U+FFFD the
+        # sender wrote into the raw header is content, not a failure.
         raise ValueError(
             "Subject contains undecodable encoded-word (U+FFFD)"
         )

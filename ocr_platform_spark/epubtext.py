@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import io
 import posixpath
+import re
 import zipfile
 from xml.etree import ElementTree
 
@@ -149,17 +150,23 @@ def chapter_blocks(
         ]
 
 
+#: a src that is not a package path: any URI scheme (``http:``,
+#: ``data:``, ...) or a protocol-relative ``//host/...`` reference
+_NON_MEMBER_SRC_RE = re.compile(r"[A-Za-z][\w+.-]*:|//")
+
+
 def _chapter_images(zf: zipfile.ZipFile, member: str,
                     html: str) -> list[tuple[int, str]]:
     """Resolved ``(position, zip member)`` for a chapter's ``<img>``
     references: hrefs resolve relative to the chapter's own directory;
-    external (``://``) sources are skipped (linked, not embedded); a
+    scheme-prefixed (``http:``, ``data:``, ...) and protocol-relative
+    (``//host``) sources are skipped (not package members); a
     package-relative source whose member is absent quarantines."""
     members = set(zf.namelist())
     base = posixpath.dirname(member)
     out: list[tuple[int, str]] = []
     for pos, src in htmltext.image_refs(html):
-        if "://" in src:
+        if "://" in src or _NON_MEMBER_SRC_RE.match(src):
             continue
         target = posixpath.normpath(posixpath.join(base, src))
         if target not in members:

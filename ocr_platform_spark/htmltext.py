@@ -215,8 +215,9 @@ def main_blocks(html: str) -> list[ContentBlock]:
 _IMG_TAG_RE = re.compile(r"<img(?=[\s/>])[^>]*>", re.I)
 _SRC_RE = re.compile(
     r"""src\s*=\s*("[^"]*"|'[^']*'|[^\s"'>]+)""", re.I)
+#: RFC 2397 ``data:image/<subtype>[;param=value]*[;base64],<data>``
 _DATA_URI_RE = re.compile(
-    r"data:(image/[-+.\w]+);base64,([A-Za-z0-9+/=\s]+)\Z")
+    r"data:(image/[-+.\w]+)((?:;[^;,]*)*),(.*)\Z", re.S)
 
 
 def image_refs(html: str) -> list[tuple[int, str]]:
@@ -249,9 +250,11 @@ def html_parts(html: str) -> list[tuple]:
     external and relative ``src`` values are skipped), interleaved by
     document position. Part shape matches the office walks:
     ``("text", pos, text)`` / ``("media", pos, ctype, name, payload)``.
-    A malformed base64 data URI quarantines (``ValueError``) — the
-    image was explicitly embedded, so dropping it silently would be a
-    content loss, unlike a merely-linked source."""
+    A ``;base64`` image payload that fails to decode quarantines
+    (``ValueError``) — the image was explicitly embedded, so dropping it
+    silently would be a content loss. Image data URIs without a
+    ``;base64`` payload (URL-encoded SVG and the like) are skipped like
+    linked sources: no raster codec reads them."""
     import base64
     import binascii
 
@@ -263,15 +266,11 @@ def html_parts(html: str) -> list[tuple]:
         if not src.startswith("data:"):
             continue  # linked, not embedded
         m = _DATA_URI_RE.match(src)
-        if m is None:
-            if src.startswith("data:image/"):
-                raise ValueError(
-                    "malformed image data URI (not base64 image/*)"
-                )
-            continue  # non-image data URI: not a picture slot
+        if m is None or m.group(2).rsplit(";", 1)[-1].lower() != "base64":
+            continue  # non-image or non-base64 data URI: no raster slot
         try:
             payload = base64.b64decode(
-                re.sub(r"\s+", "", m.group(2)), validate=True)
+                re.sub(r"\s+", "", m.group(3)), validate=True)
         except (binascii.Error, ValueError) as e:
             raise ValueError(f"undecodable data-URI base64: {e}") from e
         n_img += 1

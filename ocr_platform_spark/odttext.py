@@ -27,6 +27,7 @@ missing ``content.xml``, malformed XML.
 
 from __future__ import annotations
 
+import posixpath
 import zipfile
 from xml.etree import ElementTree
 
@@ -208,7 +209,10 @@ def document_parts(raw: bytes) -> list[tuple]:
             nonlocal pos
             if "://" in href:
                 return  # linked image, no package payload
-            member = href.lstrip("./")
+            # normpath drops a leading "./" (and inner "x/.." hops)
+            member = posixpath.normpath(href)
+            if member == ".." or member.startswith("../"):
+                return  # outside the package root: linked, not embedded
             if member not in members:
                 raise ValueError(
                     f"embedded media member missing: {member!r}"

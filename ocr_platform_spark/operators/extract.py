@@ -130,45 +130,66 @@ def ocr_rendered_page(doc_id: str, offset: int, ref: str,
     # detect phase: on the raw rendered page (run_job does NOT preprocess
     # before detect — ocr_tasks.py:110-111)
     boxes = kernels.detect_text_boxes(img)
+    _recognize_page(doc_id, offset, ref, page_index, img, boxes,
+                    w_orig, h_orig, out)
+
+
+def _recognize_page(doc_id: str, offset: int, ref: str, page_index: int,
+                    img: np.ndarray, boxes: list, w_orig: int, h_orig: int,
+                    out: dict[str, list]) -> None:
+    """Recognize phase of ``run_ocr_with_boxes`` (orchestrator.py:139-172)
+    for boxes in ORIGINAL page coordinates (a ``w_orig`` x ``h_orig``
+    page): scale each box onto the lazily preprocessed raster, crop,
+    recognize with the original box heights, emit the original coords."""
     if not boxes:
         return  # empty-page passthrough: zero block rows (orchestrator.py:133-137)
-    # recognize phase: run_ocr_with_boxes (orchestrator.py:139-172)
     prep = raster.PrepView(img)
     w_prep, h_prep = prep.size
-    scale_x = w_prep / w_orig if w_orig else 1.0
-    scale_y = h_prep / h_orig if h_orig else 1.0
-    boxes_for_crop = []
-    original_heights = []
-    for (x1, y1, x2, y2) in boxes:
-        boxes_for_crop.append(
-            (int(x1 * scale_x), int(y1 * scale_y), int(x2 * scale_x), int(y2 * scale_y))
-        )
-        original_heights.append(y2 - y1)
-    crops = [prep.crop(b) for b in boxes_for_crop]
-    rec = kernels.predict_batch(crops, original_heights=original_heights)
-    texts = [t.strip() for t, _ in rec]  # postprocess.py:4-6 (unicode strip)
-    n = min(len(boxes), len(rec), len(texts))  # orchestrator.py:158
-    for i in range(n):
-        x1, y1, x2, y2 = boxes[i]  # ORIGINAL coords kept (orchestrator.py:163)
-        out["doc_id"].append(doc_id)
-        out["offset"].append(offset)
-        out["media_ref"].append(ref)
-        out["page_index"].append(page_index)
-        out["block_index"].append(i)
-        out["x1"].append(x1)
-        out["y1"].append(y1)
-        out["x2"].append(x2)
-        out["y2"].append(y2)
-        out["text"].append(texts[i])
-        out["conf"].append(rec[i][1])
-        out["page_width"].append(w_orig)
-        out["page_height"].append(h_orig)
+    sx = w_prep / w_orig if w_orig else 1.0
+    sy = h_prep / h_orig if h_orig else 1.0
+    crops = [
+        prep.crop((int(x1 * sx), int(y1 * sy), int(x2 * sx), int(y2 * sy)))
+        for (x1, y1, x2, y2) in boxes
+    ]
+    heights = [y2 - y1 for (_x1, y1, _x2, y2) in boxes]
+    rec = kernels.predict_batch(crops, original_heights=heights)
+    # zip length-aligns boxes and results (orchestrator.py:158); text gets
+    # the unicode strip (postprocess.py:4-6)
+    for i, (box, (text, conf)) in enumerate(zip(boxes, rec)):
+        append_block(out, doc_id, offset, ref, page_index, i, box,
+                     text.strip(), conf, w_orig, h_orig)
 
 
+_BLOCK_COLS = [f.name for f in BLOCK.fields]
 _INT_BLOCK_COLS = [
     "offset", "page_index", "block_index",
     "x1", "y1", "x2", "y2", "page_width", "page_height",
 ]
+
+
+def block_columns() -> dict[str, list]:
+    """Empty column lists for one ``BLOCK`` frame."""
+    return {c: [] for c in _BLOCK_COLS}
+
+
+def append_block(out: dict[str, list], doc_id: str, offset: int, ref: str,
+                 page_index: int, block_index: int, box: tuple,
+                 text: str, conf: float, page_w: int, page_h: int) -> None:
+    """Append one ``BLOCK`` row; ``box`` is ``(x1, y1, x2, y2)``."""
+    for col, value in zip(_BLOCK_COLS, (doc_id, offset, ref, page_index,
+                                        block_index, *box, text, conf,
+                                        page_w, page_h)):
+        out[col].append(value)
+
+
+def block_frame(out: dict[str, list]) -> pd.DataFrame:
+    """Column lists -> a frame typed like ``BLOCK`` (int32 ints, float64
+    conf), the shape every block-emitting ``mapInPandas`` yields."""
+    res = pd.DataFrame(out)
+    for c in _INT_BLOCK_COLS:
+        res[c] = res[c].astype("int32")
+    res["conf"] = res["conf"].astype("float64")
+    return res
 
 
 def _ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -177,17 +198,13 @@ def _ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     vietocr_engine.py:47 — our kernels are stateless numpy, so nothing to
     load; the hook is kept so real weights drop in without a plan change)."""
     for pdf in batches:
-        out: dict[str, list] = {f.name: [] for f in BLOCK.fields}
+        out = block_columns()
         for row in zip(
             pdf["doc_id"], pdf["offset"], pdf["media_ref"],
             pdf["media_kind"], pdf["page_index"], pdf["page_desc"],
         ):
             _ocr_page(*row, out)
-        res = pd.DataFrame(out)
-        for c in _INT_BLOCK_COLS:
-            res[c] = res[c].astype("int32")
-        res["conf"] = res["conf"].astype("float64")
-        yield res
+        yield block_frame(out)
 
 
 # --- relational glue ----------------------------------------------------------
@@ -574,38 +591,21 @@ def _ocr_page_fused(doc_id: str, offset: int, ref: str, kind: str,
         return
     crops = [raster.crop(img, b) for b in boxes]
     rec = kernels.predict_batch(crops)  # original_heights=None
-    texts = [t.strip() for t, _ in rec]
-    n = min(len(boxes), len(rec), len(texts))  # orchestrator.py:75
-    for i in range(n):
-        x1, y1, x2, y2 = boxes[i]  # PREPROCESSED coords, verbatim
-        out["doc_id"].append(doc_id)
-        out["offset"].append(offset)
-        out["media_ref"].append(ref)
-        out["page_index"].append(page_index)
-        out["block_index"].append(i)
-        out["x1"].append(x1)
-        out["y1"].append(y1)
-        out["x2"].append(x2)
-        out["y2"].append(y2)
-        out["text"].append(texts[i])
-        out["conf"].append(rec[i][1])
-        out["page_width"].append(w_prep)
-        out["page_height"].append(h_prep)
+    # zip length-aligns (orchestrator.py:75); PREPROCESSED coords, verbatim
+    for i, (box, (text, conf)) in enumerate(zip(boxes, rec)):
+        append_block(out, doc_id, offset, ref, page_index, i, box,
+                     text.strip(), conf, w_prep, h_prep)
 
 
 def _ocr_batches_fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        out: dict[str, list] = {f.name: [] for f in BLOCK.fields}
+        out = block_columns()
         for row in zip(
             pdf["doc_id"], pdf["offset"], pdf["media_ref"],
             pdf["media_kind"], pdf["page_index"], pdf["page_desc"],
         ):
             _ocr_page_fused(*row, out)
-        res = pd.DataFrame(out)
-        for c in _INT_BLOCK_COLS:
-            res[c] = res[c].astype("int32")
-        res["conf"] = res["conf"].astype("float64")
-        yield res
+        yield block_frame(out)
 
 
 def ocr_blocks_fused(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -703,7 +703,7 @@ def _recognize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     arrive in detect_result original-page coordinates; scale to the
     preprocessed raster for cropping, keep original coords + heights."""
     for pdf in batches:
-        out: dict[str, list] = {f.name: [] for f in BLOCK.fields}
+        out = block_columns()
         for (doc_id, offset, ref, kind, page_index, desc,
              xs1, ys1, xs2, ys2, w_orig, h_orig) in zip(
             pdf["doc_id"], pdf["offset"], pdf["media_ref"],
@@ -718,40 +718,10 @@ def _recognize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
             page = formats.loads_page(desc)
             unit_scale = raster.PDF_UNIT_SCALE if kind == "pdf" else 1.0
             img = raster.render_page(page, unit_scale)
-            prep = raster.PrepView(img)
-            w_prep, h_prep = prep.size
-            w_orig = int(w_orig) or img.shape[1]
-            h_orig = int(h_orig) or img.shape[0]
-            sx = w_prep / w_orig if w_orig else 1.0
-            sy = h_prep / h_orig if h_orig else 1.0
-            crops = [
-                prep.crop((int(x1 * sx), int(y1 * sy), int(x2 * sx), int(y2 * sy)))
-                for (x1, y1, x2, y2) in boxes
-            ]
-            heights = [y2 - y1 for (_x1, y1, _x2, y2) in boxes]
-            rec = kernels.predict_batch(crops, original_heights=heights)
-            texts = [t.strip() for t, _ in rec]
-            n = min(len(boxes), len(rec), len(texts))  # orchestrator.py:158
-            for i in range(n):
-                x1, y1, x2, y2 = boxes[i]
-                out["doc_id"].append(doc_id)
-                out["offset"].append(offset)
-                out["media_ref"].append(ref)
-                out["page_index"].append(page_index)
-                out["block_index"].append(i)
-                out["x1"].append(x1)
-                out["y1"].append(y1)
-                out["x2"].append(x2)
-                out["y2"].append(y2)
-                out["text"].append(texts[i])
-                out["conf"].append(rec[i][1])
-                out["page_width"].append(w_orig)
-                out["page_height"].append(h_orig)
-        res = pd.DataFrame(out)
-        for c in _INT_BLOCK_COLS:
-            res[c] = res[c].astype("int32")
-        res["conf"] = res["conf"].astype("float64")
-        yield res
+            _recognize_page(doc_id, offset, ref, page_index, img, boxes,
+                            int(w_orig) or img.shape[1],
+                            int(h_orig) or img.shape[0], out)
+        yield block_frame(out)
 
 
 def recognize_with_boxes(

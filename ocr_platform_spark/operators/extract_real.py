@@ -19,57 +19,62 @@ so this pipeline uses a different, explicitly skew-bounded shape:
    ``media_kind=error`` rows — before any payload is duplicated.
 2. **repartition** on ``(doc_id, offset, bucket_index)`` — the skew fix:
    a 2,000-page scanned PDF becomes ⌈2000/K⌉ independent tasks instead
-   of one straggler. Multi-bucket PDFs are *sliced* at probe time
-   (``slice_payloads=True`` default): each bucket row carries a minimal
-   sub-PDF holding only its own pages' content/image streams
-   (:class:`..pdfcodec._Slicer`), so the whole document's bytes cross
-   the bucket shuffle ~once in total — the in-DataFrame analog of the
-   byte-range reads a cloud-storage pipeline would issue. With
-   ``slice_payloads=False`` the full payload rides on every bucket row
-   (amplification ⌈pages/K⌉). ``bucket_pages=None`` disables bucketing
-   (one task per media, zero duplication) for corpora known to have
-   bounded page counts.
-3. **OCR** (``mapInPandas``): decode ONLY the bucket's pages
-   (``pdfcodec.decode_pdf(page_indices=...)`` inflates just those
-   pages' streams), grayscale with PIL's exact ``convert("L")`` integer
-   luma, then the *shared* OCR core
-   (:func:`..operators.extract.ocr_rendered_page`) — detect, PrepView
-   crops, strip recognition, unicode strip — so the real and synthetic
-   paths cannot drift.
+   of one straggler. Multi-bucket paged payloads are *sliced* at probe
+   time (``slice_payloads=True`` default): each bucket row carries a
+   minimal sub-document holding only its own pages (for PDFs only its
+   pages' content/image streams, :class:`..pdfcodec._Slicer`), so the
+   whole document's bytes cross the bucket shuffle ~once in total — the
+   in-DataFrame analog of the byte-range reads a cloud-storage pipeline
+   would issue. With ``slice_payloads=False`` the full payload rides on
+   every bucket row (amplification ⌈pages/K⌉). ``bucket_pages=None``
+   disables bucketing (one task per media, zero duplication) for
+   corpora known to have bounded page counts.
+3. **OCR** (``mapInPandas``): decode ONLY the bucket's pages through
+   the media kind's tier (below) and emit them; raster pages go through
+   the *shared* OCR core (:func:`..operators.extract.ocr_rendered_page`)
+   — detect, PrepView crops, strip recognition, unicode strip — so the
+   real and synthetic paths cannot drift.
 4. **assemble**: the same sentinel-based
    :func:`..operators.extract.assemble_spans` re-emits each document's
    interleaved span array.
 
-**The OCR-bypass tier** (``text_layer=True``, the default): born-digital
-PDF pages that carry their text in content-stream show operators are
-parsed directly (:mod:`..pdftext`) instead of rasterized and OCR'd —
-dispatch is PER PAGE inside stage 3, so a mixed document (a text cover
-page stapled to scanned pages, or an upstream-OCR'd file with its
-invisible text layer) extracts each page the cheap way and still
-assembles into one reading-ordered span array. At 100 TB this is the
-dominant efficiency lever of the whole pipeline: a text-layer page
-costs microseconds of string parsing instead of ~10 ms of raster +
-detect + recognize, and the page-bucket shuffle shape above is
-unchanged (text pages make buckets *cheaper*, never bigger). The strict
-scanned-only contract of rounds 1-3 remains available as
-``text_layer=False``.
+**The tier table** (``_TIERS``) is the one per-kind dispatch of stages
+1 and 3: the probe's media kind maps to ``(slicer_factory | None,
+pages(raw, page_indices, text_layer))``. ``slicer_factory(raw)``
+(paged containers only) parses a payload once and returns
+``page_indices -> sub-document bytes``; ``pages`` decodes one bucket
+into a list of pages of three shapes, the shape
+:func:`..pdftext.extract_hybrid_pages` already emits:
 
-**The HTML DOM tier**: payloads sniffing as HTML (the dominant document
-kind of a real web-scale corpus; no analog in the reference, which only
-OCRs uploads) are one reflowable "page" extracted by DOM heuristics —
-innermost block elements, link-density boilerplate drop
-(:mod:`..htmltext`) — through the same probe/quarantine, bucket and
-span-assembly stages. Like the text layer, an HTML page costs string
-parsing only; unlike PDFs it is independent of the ``text_layer`` flag
-(there is no raster alternative to fall back to).
+* ``("text", blocks, w, h)`` — source text with geometry, emitted at
+  ``conf=1.0`` with no raster, detect or recognize: a text-layer PDF
+  page, the whole document of a reflowable tier (HTML DOM walk, plain
+  text, Markdown, LaTeX, subtitles, DSV, XML, JSON), or one paragraph
+  of an office/HTML/e-mail part walk;
+* ``("image", gray, w, h)`` — a grayscale raster for the OCR core: a
+  scanned PDF page, a PNG/JPEG/BMP/TIFF/GIF frame, or a picture
+  embedded in a DOCX/ODT/RTF/HTML/e-mail document;
+* ``("parts", parts, 0, 0)`` — one page of a paged MIXED container
+  (PPTX slide, EPUB chapter, mbox message, XLSX sheet): text parts and
+  decoded pictures in shape-tree order (:func:`_emit_mixed_page_parts`).
 
-**The office and plain-text tiers**: ``PK``-magic payloads refine at
-probe time into DOCX (``word/document.xml`` paragraphs,
-:mod:`..docxtext`; other archives quarantine) and payloads matching NO
-magic take the strict plain-text contract (:mod:`..plaintext` — UTF-8,
-no binary controls, no leading markup; anything else quarantines as
-before). Both are reflowable single "pages" through the same
-probe/bucket/assembly stages, like HTML.
+Page ``i`` of a bucket emits at ``page_index = page_lo + i``. Single-page
+tiers always probe as one bucket with ``page_lo = 0``, so an office /
+HTML / e-mail part walk becomes a list of one-item pages: the
+assembler's global sort key ``(offset, page_index, y1, x1,
+block_index)`` then interleaves each picture's OCR blocks (real in-page
+geometry, internal reading order intact) exactly between the
+paragraphs around it.
+
+PDFs take the HYBRID per-page dispatch under ``text_layer=True`` (the
+default): born-digital pages parse their content-stream show operators
+(:mod:`..pdftext`) instead of being rasterized and OCR'd, so a mixed
+document (a text cover page stapled to scans, or an upstream-OCR'd file
+with its invisible text layer) extracts each page the cheap way — a
+text page costs microseconds of string parsing instead of ~10 ms of
+raster + detect + recognize, and text pages only make buckets cheaper.
+``text_layer=False`` keeps the strict scanned-only contract of rounds
+1-3.
 
 Equality contract (pinned in tests/test_extract_real.py): a corpus whose
 synthetic media are re-encoded as real PNG files / scanned PDFs at
@@ -80,22 +85,25 @@ the synthetic corpus does through ``extract_documents``.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import (csvtext, docxtext, emltext, epubtext, formats, gifcodec,
-                htmltext, jpegcodec, jsontext, mdtext, multimodal,
-                odttext, pdfcodec, pdftext, plaintext, pngcodec,
-                pptxtext, rtftext, tiffcodec, transport, xlsxtext,
+from .. import (bmpcodec, csvtext, docxtext, emltext, epubtext, formats,
+                gifcodec, htmltext, jpegcodec, jsontext, latextext, mdtext,
+                multimodal, odttext, pdfcodec, pdftext, plaintext, pngcodec,
+                pptxtext, rtftext, subtext, tiffcodec, transport, xlsxtext,
                 xmltext)
 from ..schemas import BLOCK
 from .extract import (
-    _INT_BLOCK_COLS,
     MEDIA_KIND_ERROR,
     _span_refs_fit_broadcast,
+    append_block,
     assemble_spans,
+    block_columns,
+    block_frame,
     exploded_spans,
     ocr_rendered_page,
     shared_exploded_spans,
@@ -105,37 +113,150 @@ from .extract import (
 #: K pages of raster work bound each task's CPU time.
 DEFAULT_BUCKET_PAGES = 8
 
-#: multi-page container codecs sharing the (slice_pages, decode) shape —
-#: a new paged format registers here once and both the bucket slicer and
-#: the OCR-stage decoder pick it up (PDF stays special: its slicer is a
-#: parse-once object and its decode is the text-layer/raster hybrid)
-_PAGED_CODECS = {
-    "tiff": (tiffcodec.slice_pages, tiffcodec.decode_tiff),
-    "gif": (gifcodec.slice_pages, gifcodec.decode_gif),
-}
-
-#: multi-page TEXT containers (pages extract as blocks, never rasters)
-#: sharing the same (slice_pages, page_blocks) bucket shape — sheets /
-#: chapters / messages are pages, so the skew bucketing and probe-time
-#: slicing apply
-_PAGED_TEXT_CODECS: dict = {}
-
-#: multi-page MIXED containers: pages carry text blocks AND embedded
-#: pictures that OCR in place (round 5 — PPTX ``p:pic``, EPUB
-#: ``<img>``); same bucket / slice shape, but the page renderer
-#: returns ordered part lists
-_PAGED_MIXED_CODECS = {
-    "pptx": (pptxtext.slice_slides, pptxtext.slide_parts),
-    "epub": (epubtext.slice_chapters, epubtext.chapter_parts),
-    "mbox": (emltext.slice_messages, emltext.mbox_page_parts),
-    "xlsx": (xlsxtext.slice_sheets, xlsxtext.sheet_parts),
-}
-
 REAL_BUCKET = (
     "doc_id string, offset int, media_ref string, media_kind string, "
     "bucket_index int, page_lo int, page_hi int, error string, "
     "sliced boolean, data binary"
 )
+_BUCKET_COLS = [c.split()[0] for c in REAL_BUCKET.split(", ")]
+
+
+def _raster_pages(raw: bytes, page_indices: list[int] | None = None) -> list:
+    """Raster payload -> grayscale pages by its sniffed magic (TIFF/GIF
+    frames selected by ``page_indices``, else one PNG/BMP/JPEG page):
+    the top-level ``image``/``tiff``/``gif`` tiers and every embedded
+    picture. Gray (``mode="L"``) because the OCR kernels are: color
+    converts with PIL's exact ``convert("L")`` luma
+    (:func:`..pdfcodec.rgb_to_gray`)."""
+    kind = formats.sniff_kind(raw)
+    if kind == "tiff":
+        return tiffcodec.decode_tiff(raw, mode="L", page_indices=page_indices)
+    if kind == "gif":
+        return gifcodec.decode_gif(raw, mode="L", page_indices=page_indices)
+    if kind == "png":
+        rgb = pngcodec.decode_png(raw)
+    elif kind == "bmp":
+        rgb = bmpcodec.decode_bmp(raw)
+    else:
+        rgb = jpegcodec.decode_jpeg(raw)
+    return [pdfcodec.rgb_to_gray(rgb)]
+
+
+def _image_pages(grays: list) -> list[tuple]:
+    return [("image", g, g.shape[1], g.shape[0]) for g in grays]
+
+
+def _text_page(blocks: list) -> list[tuple]:
+    return [("text", blocks, 0, 0)]
+
+
+def _is_raster(payload: bytes) -> bool:
+    """An embedded picture the raster codecs decode; other formats
+    (EMF/WMF vectors, nested containers) contribute nothing — the deep
+    probe validates exactly this subset
+    (:func:`..docxtext.validate_embedded_media`)."""
+    return formats.sniff_kind(payload) in docxtext.EMBED_RASTER_KINDS
+
+
+def _walk_pages(parts: list[tuple]) -> list[tuple]:
+    """Part walk (:func:`..docxtext.document_parts` /
+    :func:`..odttext.document_parts` / :func:`..rtftext.document_parts`
+    / :func:`..htmltext.html_parts` / :func:`..emltext.eml_parts`; the
+    text or payload is the LAST tuple element) -> one-item pages in part
+    order: a one-paragraph text page per text part, one image page per
+    frame of each supported embedded picture."""
+    pages: list[tuple] = []
+    for part in parts:
+        if part[0] == "text":
+            pages += _text_page([plaintext.TextParagraph(0, part[-1])])
+        elif _is_raster(part[-1]):
+            pages += _image_pages(_raster_pages(part[-1]))
+    return pages
+
+
+def _mixed_pages(pages: list[list[tuple]]) -> list[tuple]:
+    """Paged MIXED container part lists -> ``("parts", parts, 0, 0)``
+    pages: text parts pass through, each supported picture decodes to
+    ``("rasters", ordinal, gray_pages)`` here (inside the caller's
+    atomic decode), unsupported formats drop."""
+    out: list[tuple] = []
+    for parts in pages:
+        decoded = [p if p[0] == "text"
+                   else ("rasters", p[1], _raster_pages(p[-1]))
+                   for p in parts if p[0] == "text" or _is_raster(p[-1])]
+        out.append(("parts", decoded, 0, 0))
+    return out
+
+
+def _pdf_pages(raw: bytes, page_indices, text_layer: bool) -> list[tuple]:
+    """HYBRID per-page dispatch under ``text_layer`` (text-layer pages
+    parse, no pixels ever produced; scanned pages raster), else the
+    strict scanned-only decode."""
+    if text_layer:
+        return pdftext.extract_hybrid_pages(raw, page_indices=page_indices,
+                                            mode="L")
+    return _image_pages(pdfcodec.decode_pdf(raw, page_indices=page_indices,
+                                            mode="L"))
+
+
+def _html_pages(raw: bytes, _page_indices, _text_layer) -> list[tuple]:
+    """DOM tier (innermost blocks, link-density boilerplate drop):
+    text-only documents are one flat text page; embedded data-URI images
+    (the saved-page shape) make it a part walk, OCR'd in place."""
+    parts = htmltext.html_parts(htmltext.decode_html(raw))
+    if all(p[0] == "text" for p in parts):
+        return _text_page([htmltext.ContentBlock(p[1], p[2], 0.0)
+                           for p in parts])
+    return _walk_pages(parts)
+
+
+def _raster_tier(raw: bytes, page_indices, _text_layer) -> list[tuple]:
+    return _image_pages(_raster_pages(raw, page_indices))
+
+
+#: media kind (as probed) -> ``(slicer_factory | None, pages)``; see the
+#: module docstring. Entries call tier functions through their module
+#: attributes, so a function swapped in its module is the one that runs.
+_TIERS = {
+    "pdf": (lambda raw: pdfcodec._Slicer(raw).slice, _pdf_pages),
+    "image": (None, _raster_tier),
+    "tiff": (lambda raw: partial(tiffcodec.slice_pages, raw), _raster_tier),
+    "gif": (lambda raw: partial(gifcodec.slice_pages, raw), _raster_tier),
+    "pptx": (lambda raw: partial(pptxtext.slice_slides, raw),
+             lambda raw, idx, _tl: _mixed_pages(
+                 pptxtext.slide_parts(raw, page_indices=idx))),
+    "epub": (lambda raw: partial(epubtext.slice_chapters, raw),
+             lambda raw, idx, _tl: _mixed_pages(
+                 epubtext.chapter_parts(raw, page_indices=idx))),
+    "mbox": (lambda raw: partial(emltext.slice_messages, raw),
+             lambda raw, idx, _tl: _mixed_pages(
+                 emltext.mbox_page_parts(raw, page_indices=idx))),
+    "xlsx": (lambda raw: partial(xlsxtext.slice_sheets, raw),
+             lambda raw, idx, _tl: _mixed_pages(
+                 xlsxtext.sheet_parts(raw, page_indices=idx))),
+    "html": (None, _html_pages),
+    "docx": (None, lambda raw, _i, _tl: _walk_pages(
+        docxtext.document_parts(raw))),
+    "odt": (None, lambda raw, _i, _tl: _walk_pages(
+        odttext.document_parts(raw))),
+    "rtf": (None, lambda raw, _i, _tl: _walk_pages(
+        rtftext.document_parts(raw))),
+    "eml": (None, lambda raw, _i, _tl: _walk_pages(
+        emltext.eml_parts(plaintext.decode_text(raw)))),
+    "txt": (None, lambda raw, _i, _tl: _text_page(
+        plaintext.paragraph_blocks(plaintext.decode_text(raw)))),
+    "md": (None, lambda raw, _i, _tl: _text_page(
+        mdtext.markdown_blocks(plaintext.decode_text(raw)))),
+    "tex": (None, lambda raw, _i, _tl: _text_page(
+        latextext.latex_blocks(plaintext.decode_text(raw)))),
+    "sub": (None, lambda raw, _i, _tl: _text_page(
+        subtext.subtitle_blocks(plaintext.decode_text(raw)))),
+    "csv": (None, lambda raw, _i, _tl: _text_page(
+        csvtext.tabular_blocks(plaintext.decode_text(raw)))),
+    "json": (None, lambda raw, _i, _tl: _text_page(
+        jsontext.json_blocks(plaintext.decode_text(raw)))),
+    "xml": (None, lambda raw, _i, _tl: _text_page(xmltext.xml_blocks(raw))),
+}
 
 
 def _probe(raw: bytes, text_layer: bool = False) -> tuple[str, int]:
@@ -164,11 +285,13 @@ def _bucket_batches_fn(bucket_pages: int | None,
     def _bucket_batches(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "offset", "media_ref", "media_kind",
-                "bucket_index", "page_lo", "page_hi", "error",
-                "sliced", "data"]
         for pdf in batches:
-            out: dict[str, list] = {c: [] for c in cols}
+            out: dict[str, list] = {c: [] for c in _BUCKET_COLS}
+
+            def add(*row) -> None:
+                for c, v in zip(_BUCKET_COLS, row):
+                    out[c].append(v)
+
             for doc_id, offset, ref, data in zip(
                 pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["data"]
             ):
@@ -186,46 +309,22 @@ def _bucket_batches_fn(bucket_pages: int | None,
                 except Exception as exc:
                     # quarantine BEFORE the payload is duplicated: one
                     # narrow error row, no data rides along
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(offset)
-                    out["media_ref"].append(ref)
-                    out["media_kind"].append(MEDIA_KIND_ERROR)
-                    out["bucket_index"].append(-1)
-                    out["page_lo"].append(-1)
-                    out["page_hi"].append(-1)
-                    out["error"].append(str(exc)[:200])
-                    out["sliced"].append(False)
-                    out["data"].append(None)
+                    add(doc_id, offset, ref, MEDIA_KIND_ERROR, -1, -1, -1,
+                        str(exc)[:200], False, None)
                     continue
                 k = bucket_pages or max(1, n_pages)
                 n_buckets = max(1, (n_pages + k - 1) // k)
-                slice_fn = None
-                if slice_payloads and n_buckets > 1:
+                slicer, slice_fn = _TIERS[kind][0], None
+                if slicer is not None and slice_payloads and n_buckets > 1:
                     # parse once per document; each bucket row then
                     # carries a minimal sub-document (only its own
                     # pages' streams) instead of a full-payload copy —
                     # the whole document crosses the bucket shuffle
                     # ~once in total instead of ⌈pages/K⌉ times
                     try:
-                        if kind == "pdf":
-                            slice_fn = pdfcodec._Slicer(raw).slice
-                        elif kind in _PAGED_CODECS:
-                            slice_fn = (
-                                lambda idx, _r=raw, _k=kind:
-                                _PAGED_CODECS[_k][0](_r, idx)
-                            )
-                        elif kind in _PAGED_TEXT_CODECS:
-                            slice_fn = (
-                                lambda idx, _r=raw, _k=kind:
-                                _PAGED_TEXT_CODECS[_k][0](_r, idx)
-                            )
-                        elif kind in _PAGED_MIXED_CODECS:
-                            slice_fn = (
-                                lambda idx, _r=raw, _k=kind:
-                                _PAGED_MIXED_CODECS[_k][0](_r, idx)
-                            )
+                        slice_fn = slicer(raw)
                     except ValueError:
-                        slice_fn = None
+                        pass
                 for b in range(n_buckets):
                     lo, hi = b * k, min(n_pages, (b + 1) * k)
                     payload, sliced = raw, False
@@ -238,16 +337,8 @@ def _bucket_batches_fn(bucket_pages: int | None,
                             # is near-dead defensive code: fall back to
                             # the full payload rather than quarantine
                             pass
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(offset)
-                    out["media_ref"].append(ref)
-                    out["media_kind"].append(kind)
-                    out["bucket_index"].append(b)
-                    out["page_lo"].append(lo)
-                    out["page_hi"].append(hi)
-                    out["error"].append(None)
-                    out["sliced"].append(sliced)
-                    out["data"].append(payload)
+                    add(doc_id, offset, ref, kind, b, lo, hi, None, sliced,
+                        payload)
             res = pd.DataFrame(out)
             for c in ("offset", "bucket_index", "page_lo", "page_hi"):
                 res[c] = res[c].astype("int32")
@@ -268,74 +359,9 @@ def emit_text_blocks(doc_id: str, offset: int, ref: str, page_index: int,
     :class:`..htmltext.ContentBlock`)."""
     for i, b in enumerate(blocks):
         text = b.text.strip()
-        if not text:
-            continue
-        out["doc_id"].append(doc_id)
-        out["offset"].append(offset)
-        out["media_ref"].append(ref)
-        out["page_index"].append(page_index)
-        out["block_index"].append(i)
-        out["x1"].append(b.x1)
-        out["y1"].append(b.y1)
-        out["x2"].append(b.x2)
-        out["y2"].append(b.y2)
-        out["text"].append(text)
-        out["conf"].append(1.0)
-        out["page_width"].append(page_w)
-        out["page_height"].append(page_h)
-
-
-def _decode_raster_pages(payload: bytes) -> list:
-    """Standalone raster payload -> grayscale page list via the magic
-    dispatch (PNG/BMP/TIFF/GIF/JPEG), shared by the top-level image
-    branch and the office embedded-media interleave."""
-    kind = formats.sniff_kind(payload)
-    if kind == "png":
-        return [pdfcodec.rgb_to_gray(pngcodec.decode_png(payload))]
-    if kind == "bmp":
-        from .. import bmpcodec
-
-        return [pdfcodec.rgb_to_gray(bmpcodec.decode_bmp(payload))]
-    if kind in _PAGED_CODECS:
-        return _PAGED_CODECS[kind][1](payload, mode="L", page_indices=None)
-    return [pdfcodec.rgb_to_gray(jpegcodec.decode_jpeg(payload))]
-
-
-def _decode_mixed_parts(parts: list[tuple]) -> list[tuple]:
-    """One MIXED page's part walk -> emission-ready parts: text parts
-    pass through, each supported embedded picture decodes to
-    ``("rasters", ordinal, gray_pages)`` (so decode failures surface
-    inside the caller's atomic try), unsupported formats drop."""
-    out: list[tuple] = []
-    for part in parts:
-        if part[0] == "text":
-            out.append(part)
-        elif formats.sniff_kind(part[-1]) in docxtext.EMBED_RASTER_KINDS:
-            out.append(
-                ("rasters", part[1], _decode_raster_pages(part[-1]))
-            )
-    return out
-
-
-def _office_content(parts: list[tuple]) -> list[tuple]:
-    """Part walk output (:func:`..docxtext.document_parts` /
-    :func:`..odttext.document_parts` / :func:`..rtftext.document_parts`
-    / :func:`..htmltext.html_parts`) -> ordered ``("text", text)`` /
-    ``("raster", gray_page)`` content items; the text/payload slot is
-    uniformly the LAST tuple element across the walks. Embedded
-    pictures whose bytes sniff as a supported raster codec decode here
-    (a multi-frame TIFF/GIF contributes one item per frame, in frame
-    order); unsupported formats (EMF/WMF vectors, nested containers)
-    contribute nothing — the deep probe validates exactly this subset
-    (:func:`..docxtext.validate_embedded_media`)."""
-    content: list[tuple] = []
-    for part in parts:
-        if part[0] == "text":
-            content.append(("text", part[-1]))
-        elif formats.sniff_kind(part[-1]) in docxtext.EMBED_RASTER_KINDS:
-            for page in _decode_raster_pages(part[-1]):
-                content.append(("raster", page))
-    return content
+        if text:
+            append_block(out, doc_id, offset, ref, page_index, i,
+                         (b.x1, b.y1, b.x2, b.y2), text, 1.0, page_w, page_h)
 
 
 def _emit_mixed_page_parts(doc_id: str, offset: int, ref: str,
@@ -354,27 +380,16 @@ def _emit_mixed_page_parts(doc_id: str, offset: int, ref: str,
         if part[0] == "text":
             _k, ordinal, text = part
             text = text.strip()
-            if not text:
-                continue
-            out["doc_id"].append(doc_id)
-            out["offset"].append(offset)
-            out["media_ref"].append(ref)
-            out["page_index"].append(page_index)
-            out["block_index"].append(bi)
-            out["x1"].append(0)
-            out["y1"].append(ordinal)
-            out["x2"].append(max(1, len(text)))
-            out["y2"].append(ordinal + 1)
-            out["text"].append(text)
-            out["conf"].append(1.0)
-            out["page_width"].append(0)
-            out["page_height"].append(0)
-            bi += 1
+            if text:
+                append_block(out, doc_id, offset, ref, page_index, bi,
+                             (0, ordinal, max(1, len(text)), ordinal + 1),
+                             text, 1.0, 0, 0)
+                bi += 1
             continue
         _k, ordinal, pages = part  # ("rasters", ordinal, gray pages)
         rank = 0
         for page in pages:
-            tmp: dict[str, list] = {f.name: [] for f in BLOCK.fields}
+            tmp = block_columns()
             ocr_rendered_page(doc_id, offset, ref, 0, page, tmp)
             order = sorted(
                 range(len(tmp["text"])),
@@ -382,19 +397,9 @@ def _emit_mixed_page_parts(doc_id: str, offset: int, ref: str,
                                tmp["block_index"][k]),
             )
             for k in order:
-                out["doc_id"].append(doc_id)
-                out["offset"].append(offset)
-                out["media_ref"].append(ref)
-                out["page_index"].append(page_index)
-                out["block_index"].append(bi)
-                out["x1"].append(rank)
-                out["y1"].append(ordinal)
-                out["x2"].append(rank + 1)
-                out["y2"].append(ordinal + 1)
-                out["text"].append(tmp["text"][k])
-                out["conf"].append(tmp["conf"][k])
-                out["page_width"].append(0)
-                out["page_height"].append(0)
+                append_block(out, doc_id, offset, ref, page_index, bi,
+                             (rank, ordinal, rank + 1, ordinal + 1),
+                             tmp["text"][k], tmp["conf"][k], 0, 0)
                 bi += 1
                 rank += 1
 
@@ -412,7 +417,7 @@ def _ocr_real_batches_fn(text_layer: bool = False):
 
 
 def _ocr_real_frame(pdf: pd.DataFrame, text_layer: bool) -> pd.DataFrame:
-    out: dict[str, list] = {f.name: [] for f in BLOCK.fields}
+    out = block_columns()
     for doc_id, offset, ref, kind, lo, hi, sliced, data in zip(
         pdf["doc_id"], pdf["offset"], pdf["media_ref"],
         pdf["media_kind"], pdf["page_lo"], pdf["page_hi"],
@@ -420,163 +425,19 @@ def _ocr_real_frame(pdf: pd.DataFrame, text_layer: bool) -> pd.DataFrame:
     ):
         if kind == MEDIA_KIND_ERROR:
             continue
-        raw = bytes(data)
+        # looked up OUTSIDE the try: a kind without a tier is a program
+        # error and fails the task instead of extracting to zero blocks
+        tier_pages = _TIERS[kind][1]
+        # a sliced payload holds ONLY this bucket's pages (local indices
+        # 0..hi-lo); global numbering still comes from page_lo below
+        idx = None if sliced else list(range(int(lo), int(hi)))
         # Decode inside the try (a decode failure drops the bucket
         # ATOMICALLY — no partial emission), emission outside it (an
         # OCR/kernel failure propagates LOUDLY; swallowing it after
         # some pages' rows were appended would leave a silently
         # part-extracted document).
-        blocks = hybrid = pages = paged_text = paged_mixed = office = None
         try:
-            # mode="L": the OCR kernels are grayscale — native-gray
-            # PDF pages stay 2-D end-to-end (no RGB round trip),
-            # color content converts with PIL's exact convert("L")
-            # luma AFTER resampling (pdfcodec.rgb_to_gray)
-            if kind == "html":
-                # DOM tier: innermost blocks, link-density boilerplate
-                # drop — plus embedded data-URI images (the saved-page
-                # shape) OCR'd in place between their surrounding
-                # blocks (round 5). Text-only documents keep the flat
-                # block emission (byte-identical to the pre-r5 path).
-                hp = htmltext.html_parts(htmltext.decode_html(raw))
-                if all(p[0] == "text" for p in hp):
-                    blocks = [
-                        htmltext.ContentBlock(p[1], p[2], 0.0) for p in hp
-                    ]
-                else:
-                    office = _office_content(hp)
-            elif kind == "docx":
-                # office tier: the INTERLEAVED part walk — paragraphs
-                # in document order PLUS embedded pictures
-                # (w:drawing/a:blip, VML imagedata) decoded through the
-                # real raster codecs and OCR'd IN PLACE, so a scanned
-                # page pasted into a DOCX extracts between its
-                # surrounding paragraphs (headers/footers live in other
-                # zip members and never emit — the office boilerplate
-                # drop)
-                office = _office_content(docxtext.document_parts(raw))
-            elif kind == "odt":
-                # OpenDocument sibling: content.xml text:p/text:h walk
-                # + draw:image pictures, same interleave contract
-                office = _office_content(odttext.document_parts(raw))
-            elif kind == "rtf":
-                # legacy desktop/email: strict RTF token stream, with
-                # embedded \pict PNG/JPEG pictures interleaving like
-                # the DOCX walk (round 5)
-                office = _office_content(rtftext.document_parts(raw))
-            elif kind == "txt":
-                # plain-text tier: blank-line paragraph split, the
-                # probe's final no-magic fallback
-                blocks = plaintext.paragraph_blocks(
-                    plaintext.decode_text(raw)
-                )
-            elif kind == "md":
-                # markdown tier (probe-refined from txt): rendered-text
-                # blocks — markup stripped, soft wraps join, code
-                # fences verbatim (..mdtext module docstring)
-                blocks = mdtext.markdown_blocks(
-                    plaintext.decode_text(raw)
-                )
-            elif kind == "tex":
-                # LaTeX tier (probe-refined from txt): the arXiv
-                # shape — rendered text, math/cites dropped, captions
-                # kept (..latextext module docstring)
-                from .. import latextext
-
-                blocks = latextext.latex_blocks(
-                    plaintext.decode_text(raw)
-                )
-            elif kind == "eml":
-                # e-mail tier (probe-refined from txt): decoded
-                # Subject + supported body parts in part order, html
-                # parts through the DOM walk, and raster ATTACHMENTS
-                # OCR'd in place between the parts around them
-                # (round 5 — the office interleave rule applied to
-                # mail); mbox archives take the paged route below
-                office = _office_content(
-                    emltext.eml_parts(plaintext.decode_text(raw))
-                )
-            elif kind == "sub":
-                # subtitle tier (probe-refined from txt): SRT/WebVTT
-                # cue text — ids/timestamps/markup drop, rolling
-                # duplicates collapse (..subtext module docstring)
-                from .. import subtext
-
-                blocks = subtext.subtitle_blocks(
-                    plaintext.decode_text(raw)
-                )
-            elif kind == "csv":
-                # tabular tier (probe-refined from txt): one block per
-                # row, cells joined with a single space — the XLSX
-                # sheet rule over bare DSV (..csvtext module docstring)
-                blocks = csvtext.tabular_blocks(
-                    plaintext.decode_text(raw)
-                )
-            elif kind == "xml":
-                # XML tier: feeds/sitemaps/data exports — leaf text
-                # under strip-lines-join; feed rich-content elements
-                # through the DOM walk (..xmltext module docstring)
-                blocks = xmltext.xml_blocks(raw)
-            elif kind == "json":
-                # JSON/JSONL tier (probe-refined from txt): string
-                # VALUES only, document order (..jsontext docstring)
-                blocks = jsontext.json_blocks(
-                    plaintext.decode_text(raw)
-                )
-            elif kind in _PAGED_TEXT_CODECS:
-                # paged office containers: sheets/chapters/messages are
-                # pages, so buckets and slicing apply exactly like
-                # raster PDFs — but pages extract as text blocks,
-                # never rasters
-                idx = (None if sliced
-                       else list(range(int(lo), int(hi))))
-                paged_text = _PAGED_TEXT_CODECS[kind][1](
-                    raw, page_indices=idx,
-                )
-            elif kind in _PAGED_MIXED_CODECS:
-                # paged MIXED containers (PPTX): slides are pages whose
-                # parts interleave text paragraphs with embedded
-                # pictures; pictures decode through the raster codecs
-                # HERE (atomically with the part walk) and OCR below
-                idx = (None if sliced
-                       else list(range(int(lo), int(hi))))
-                paged_mixed = [
-                    _decode_mixed_parts(p)
-                    for p in _PAGED_MIXED_CODECS[kind][1](
-                        raw, page_indices=idx,
-                    )
-                ]
-            elif kind == "pdf" and text_layer:
-                # HYBRID dispatch: text-layer pages parse (no pixels
-                # ever produced), scanned pages raster here + OCR below
-                idx = (None if sliced
-                       else list(range(int(lo), int(hi))))
-                hybrid = pdftext.extract_hybrid_pages(
-                    raw, page_indices=idx, mode="L",
-                )
-            elif kind == "pdf":
-                # a sliced payload holds ONLY this bucket's pages
-                # (local indices 0..hi-lo); global numbering still
-                # comes from page_lo below
-                idx = (None if sliced
-                       else list(range(int(lo), int(hi))))
-                pages = pdfcodec.decode_pdf(
-                    raw, page_indices=idx, mode="L",
-                )
-            elif kind in _PAGED_CODECS:
-                idx = (None if sliced
-                       else list(range(int(lo), int(hi))))
-                pages = _PAGED_CODECS[kind][1](
-                    raw, mode="L", page_indices=idx,
-                )
-            elif formats.sniff_kind(raw) == "png":
-                pages = [pdfcodec.rgb_to_gray(pngcodec.decode_png(raw))]
-            elif formats.sniff_kind(raw) == "bmp":
-                from .. import bmpcodec
-
-                pages = [pdfcodec.rgb_to_gray(bmpcodec.decode_bmp(raw))]
-            else:
-                pages = [pdfcodec.rgb_to_gray(jpegcodec.decode_jpeg(raw))]
+            pages = tier_pages(bytes(data), idx, text_layer)
         except Exception:
             # residual corruption past the probe: entropy-level only
             # (JPEG entropy bits carry no checksum; a PDF image
@@ -586,57 +447,16 @@ def _ocr_real_frame(pdf: pd.DataFrame, text_layer: bool) -> pd.DataFrame:
             # the job; everything structurally detectable already
             # quarantined with a triage row at probe time.
             continue
-        if blocks is not None:
-            emit_text_blocks(doc_id, int(offset), ref, int(lo),
-                             blocks, 0, 0, out)
-        elif office is not None:
-            # content ordinal AS page_index: the assembler's global
-            # sort key (offset, page_index, y1, x1, block_index) then
-            # interleaves each picture's OCR blocks (real in-page
-            # geometry, internal reading order intact) exactly between
-            # the paragraphs around it. For text-only documents this
-            # is sort-equivalent to the old single-page ordinal-y1
-            # emission — identical span output.
-            for i, (okind, item) in enumerate(office):
-                if okind == "text":
-                    emit_text_blocks(
-                        doc_id, int(offset), ref, i,
-                        [plaintext.TextParagraph(0, item)], 0, 0, out,
-                    )
-                else:
-                    ocr_rendered_page(
-                        doc_id, int(offset), ref, i, item, out,
-                    )
-        elif paged_text is not None:
-            for i, page_blocks in enumerate(paged_text):
-                emit_text_blocks(doc_id, int(offset), ref, int(lo) + i,
-                                 page_blocks, 0, 0, out)
-        elif paged_mixed is not None:
-            for i, page_parts in enumerate(paged_mixed):
-                _emit_mixed_page_parts(doc_id, int(offset), ref,
-                                       int(lo) + i, page_parts, out)
-        elif hybrid is not None:
-            for i, (pkind, payload, pw, ph) in enumerate(hybrid):
-                if pkind == "text":
-                    emit_text_blocks(
-                        doc_id, int(offset), ref, int(lo) + i,
-                        payload, pw, ph, out,
-                    )
-                else:
-                    ocr_rendered_page(
-                        doc_id, int(offset), ref, int(lo) + i,
-                        payload, out,
-                    )
-        else:
-            for i, page in enumerate(pages):
-                ocr_rendered_page(
-                    doc_id, int(offset), ref, int(lo) + i, page, out
-                )
-    res = pd.DataFrame(out)
-    for c in _INT_BLOCK_COLS:
-        res[c] = res[c].astype("int32")
-    res["conf"] = res["conf"].astype("float64")
-    return res
+        for i, (shape, payload, w, h) in enumerate(pages, int(lo)):
+            if shape == "text":
+                emit_text_blocks(doc_id, int(offset), ref, i, payload, w, h,
+                                 out)
+            elif shape == "image":
+                ocr_rendered_page(doc_id, int(offset), ref, i, payload, out)
+            else:
+                _emit_mixed_page_parts(doc_id, int(offset), ref, i, payload,
+                                       out)
+    return block_frame(out)
 
 
 def real_page_buckets(

@@ -35,6 +35,27 @@ from tests.test_extract_md import content_md
 from tests.test_extract_text_plain import content_txt
 from tests.test_extract_eml import content_eml, content_mbox
 
+#: the rotation's encoders by tier (tiers 2 and 3 are special-cased in
+#: :func:`encode_tier`)
+_ENCODERS = {
+    0: reencode_real, 1: reencode_tiff, 4: content_html, 5: content_docx,
+    6: content_txt, 7: content_pptx, 8: content_xlsx, 9: content_epub,
+    10: content_odt, 11: content_rtf, 12: content_md, 13: content_dsv,
+    14: content_xml, 15: content_jsonl, 16: content_tex, 17: content_eml,
+    18: content_mbox,
+}
+N_TIERS = 19
+
+
+def encode_tier(tier: int, payload: bytes, i: int) -> tuple[bytes, bool]:
+    """Synthetic container bytes -> the ``tier``-th real encoding of the
+    rotation; the flag is True for a text-layer PDF."""
+    if tier == 2:
+        return reencode_wild(payload, i), False
+    if tier == 3:
+        return reencode_text_layer(payload)
+    return _ENCODERS[tier](payload), False
+
 
 def test_all_tiers_in_one_job(spark):
     docs, media = corpus.generate(30, seed=4242, max_pages=6)
@@ -45,47 +66,9 @@ def test_all_tiers_in_one_job(spark):
     )
     rows, text_pdf_refs = [], set()
     for i, (ref, m) in enumerate(sorted(media.items())):
-        tier = i % 19
-        if tier == 0:
-            data = reencode_real(m["data"])
-        elif tier == 1:
-            data = reencode_tiff(m["data"])
-        elif tier == 2:
-            data = reencode_wild(m["data"], i)
-        elif tier == 3:
-            data, is_pdf = reencode_text_layer(m["data"])
-            if is_pdf:
-                text_pdf_refs.add(ref)
-        elif tier == 4:
-            data = content_html(m["data"])
-        elif tier == 5:
-            data = content_docx(m["data"])
-        elif tier == 6:
-            data = content_txt(m["data"])
-        elif tier == 7:
-            data = content_pptx(m["data"])
-        elif tier == 8:
-            data = content_xlsx(m["data"])
-        elif tier == 9:
-            data = content_epub(m["data"])
-        elif tier == 10:
-            data = content_odt(m["data"])
-        elif tier == 11:
-            data = content_rtf(m["data"])
-        elif tier == 12:
-            data = content_md(m["data"])
-        elif tier == 13:
-            data = content_dsv(m["data"])
-        elif tier == 14:
-            data = content_xml(m["data"])
-        elif tier == 15:
-            data = content_jsonl(m["data"])
-        elif tier == 16:
-            data = content_tex(m["data"])
-        elif tier == 17:
-            data = content_eml(m["data"])
-        else:
-            data = content_mbox(m["data"])
+        data, is_text_pdf = encode_tier(i % N_TIERS, m["data"], i)
+        if is_text_pdf:
+            text_pdf_refs.add(ref)
         rows.append((ref, bytearray(data)))
     assert text_pdf_refs, "rotation must hit at least one text-layer PDF"
     mixed = spark.createDataFrame(rows, "media_ref string, data binary")

@@ -110,6 +110,21 @@ def test_subject_mojibake_quarantines_not_renders():
         emltext.message_spans(raw)
 
 
+def test_subject_with_literal_replacement_char_renders():
+    """A U+FFFD written into the raw UTF-8 Subject is content, not a
+    failed encoded-word decode: the message extracts, Subject first."""
+    from tests.test_tier_table import real_blocks
+
+    for subject, want in (("report \ufffd final", "report \ufffd final"),
+                          ("=?utf-8?Q?ok?= \ufffd", "ok \ufffd")):
+        raw = emltext.encode_eml(H + [("Subject", subject)], body="body")
+        _mid, parts = emltext.message_spans(raw)
+        assert parts[0] == ("text", 0, want)
+        kind, blocks = real_blocks(raw)
+        assert kind == "eml"
+        assert list(blocks["text"]) == [want, "body"]
+
+
 def _rich_fixture() -> bytes:
     import numpy as np
 

@@ -126,9 +126,9 @@ def test_docx_unsupported_embedded_format_is_skipped():
     assert [p[0] for p in parts] == ["text", "media", "text"]
     assert parts[1][1] == "application/octet-stream"
     assert docxtext.probe_docx(docx, deep=True) == (1, 0, 0)  # not validated
-    from ocr_platform_spark.operators.extract_real import _office_content
+    from ocr_platform_spark.operators.extract_real import _walk_pages
 
-    content = _office_content(parts)
+    content = _walk_pages(parts)
     assert [c[0] for c in content] == ["text", "text"]
 
 
@@ -162,6 +162,43 @@ def test_odt_missing_media_member_quarantines():
                 dst.writestr(info, src.read(info.filename))
     with pytest.raises(ValueError, match="embedded media member missing"):
         odttext.document_parts(buf.getvalue())
+
+
+def _rewrite_member(raw: bytes, name: str, old: bytes, new: bytes) -> bytes:
+    """The same zip with ``old`` replaced by ``new`` inside ``name``."""
+    import io
+    import zipfile
+
+    src = zipfile.ZipFile(io.BytesIO(raw))
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as dst:
+        for info in src.infolist():
+            data = src.read(info.filename)
+            if info.filename == name:
+                data = data.replace(old, new)
+            dst.writestr(info, data)
+    return buf.getvalue()
+
+
+def test_odt_hrefs_resolve_by_normpath():
+    """``../`` leaves the package root (a linked picture, skipped) —
+    it must not lose its dots and resolve to ``Pictures/...``; an
+    explicit ``./`` prefix still names the package member."""
+    from tests.test_tier_table import real_blocks
+
+    odt = odttext.encode_odt_with_media(["first para", _word_png("scan"),
+                                         "last para"])
+    up = _rewrite_member(odt, "content.xml", b'xlink:href="Pictures/',
+                         b'xlink:href="../Pictures/')
+    assert [p[0] for p in odttext.document_parts(up)] == ["text", "text"]
+    dot = _rewrite_member(odt, "content.xml", b'xlink:href="Pictures/',
+                          b'xlink:href="./Pictures/')
+    assert [p[0] for p in odttext.document_parts(dot)] == [
+        "text", "media", "text"]
+    kind, blocks = real_blocks(dot)
+    assert kind == "odt"
+    assert list(blocks.sort_values(["page_index", "y1", "x1"])["text"]) == [
+        "first para", "scan", "last para"]
 
 
 # --- pipeline leg ------------------------------------------------------------
@@ -440,6 +477,25 @@ def test_epub_missing_image_member_quarantines():
         epubtext.probe_epub(buf.getvalue(), deep=True)
 
 
+def test_epub_non_member_image_srcs_keep_chapter_text():
+    """``data:`` and protocol-relative ``//host`` image srcs are not
+    package members: skipped, the book keeps its chapter text."""
+    from ocr_platform_spark import epubtext
+    from tests.test_tier_table import real_blocks
+
+    book = epubtext.encode_epub([
+        "<html><head><title>t</title></head><body><p>chapter text</p>"
+        '<img src="data:image/png;base64,iVBORw0KGgo="/>'
+        '<img src="//cdn.example/x.png"/>'
+        "<p>more text</p></body></html>"])
+    assert epubtext.probe_epub(book, deep=True) == (1, 0, 0)
+    assert [p[0] for p in epubtext.chapter_parts(book)[0]] == [
+        "text", "text"]
+    kind, blocks = real_blocks(book)
+    assert kind == "epub"
+    assert list(blocks["text"]) == ["chapter text", "more text"]
+
+
 def test_epub_slice_keeps_chapter_images():
     from ocr_platform_spark import epubtext
 
@@ -526,6 +582,35 @@ def test_html_malformed_data_uri_quarantines():
            '</body></html>').encode()
     with _pytest.raises(ValueError, match="corrupt embedded media"):
         multimodal.probe_real_media(doc, deep=True)
+
+
+def test_html_image_data_uri_variants():
+    """A non-base64 image data URI (URL-encoded SVG) is skipped like a
+    linked image; a ``;base64`` payload behind parameters decodes."""
+    import base64
+
+    from ocr_platform_spark import htmltext, multimodal
+    from tests.test_tier_table import real_blocks
+
+    svg = (b"<!doctype html><html><body><p>before svg</p>"
+           b'<img src="data:image/svg+xml,%3Csvg%3E%3C/svg%3E">'
+           b"<p>after svg</p></body></html>")
+    parts = htmltext.html_parts(htmltext.decode_html(svg))
+    assert [p[0] for p in parts] == ["text", "text"]
+    assert multimodal.probe_real_media(svg, deep=True)[0] == "html"
+    kind, blocks = real_blocks(svg)
+    assert kind == "html"
+    assert list(blocks["text"]) == ["before svg", "after svg"]
+
+    b64 = base64.b64encode(_word_png("line")).decode()
+    param = ("<!doctype html><html><body><p>html before</p>"
+             f'<img src="data:image/png;charset=utf-8;base64,{b64}"/>'
+             "<p>html after</p></body></html>").encode()
+    parts = htmltext.html_parts(htmltext.decode_html(param))
+    assert [p[0] for p in parts] == ["text", "media", "text"]
+    _kind, blocks = real_blocks(param)
+    assert list(blocks.sort_values(["page_index", "y1", "x1"])["text"]) == [
+        "html before", "line", "html after"]
 
 
 # --- e-mail: raster attachments OCR in place ---------------------------------
